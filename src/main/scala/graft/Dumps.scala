@@ -10,7 +10,16 @@ import org.apache.spark.sql.DataFrame
   * the dumps. Disabled outside Verify so benchmarks never pay the write.
   */
 object Dumps {
-  val Dir = "/root/repo/target/graft_dumps"
+  /** Scratch root every dump path derives from: env `SPARK_GRAFT_SCRATCH`,
+    * else the absolute path of `target` under the working directory (the
+    * repository root when run through sbt). The paths appear literally in
+    * the oracle SQL, so the run that writes the dumps and the oracle that
+    * reads them must see the same value.
+    */
+  val Root: String = sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+    new java.io.File("target").getAbsolutePath)
+
+  val Dir = s"$Root/graft_dumps"
 
   @volatile var enabled = false
 

@@ -5,14 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Stats, Windows}
+import graft.SfTables.{load => t}
 
 /** Aggregation + window/ordered operator queries (SURVEY.md §2.4–§2.5),
   * DuckDB-oracle'd. Naming/rounding conventions as in [[QueriesRel]].
   */
 object QueriesAgg {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -25,8 +25,9 @@ object QueriesCorpus {
 
   private val P = Corpus.Params(rows = 2000L, entities = 20)
 
-  /** Fixed absolute dump path — referenced literally by the oracle SQL. */
-  private val D = "/root/repo/target/graft_corpus"
+  /** Absolute dump path under [[Dumps.Root]] — referenced literally by the
+    * oracle SQL. */
+  private val D = s"${Dumps.Root}/graft_corpus"
 
   @volatile private var dumped = false
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Stats
+import graft.SfTables.{load => t}
 
 /** Round-2 coverage queries: the SURVEY §2 components the round-1 verdict
   * flagged as claimed-but-not-oracle'd (J4 ranked-dim join, P5 any-NA entity
@@ -14,9 +15,6 @@ import graft.operators.Stats
   * via a parameterized CI level). Conventions as in [[QueriesRel]].
   */
 object QueriesExt {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
 

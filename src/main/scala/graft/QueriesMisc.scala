@@ -3,12 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.SfTables.{load => t}
 
 /** Sampling / ML-boundary / source-format coverage (SURVEY.md §2.1, §2.10). */
 object QueriesMisc {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Three-commit time-chunked snapshot table over `documents` (ts chunks
     * [0,12), [12,36), [36,∞)) — the shared scaffold of the windowed read

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Stats
+import graft.SfTables.{load => t}
 
 /** Round-3 coverage queries: the statistical surface the round-2 verdict
   * named as the remaining real-user gaps — Wilcoxon p-values (rank-sum and
@@ -15,9 +16,6 @@ import graft.operators.Stats
   * Abramowitz–Stegun erf polynomial, so the oracle replays it exactly.
   */
 object QueriesR3 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** The A&S 7.1.26 two-sided p, spelled in ANSI SQL over a column `z`
     * (identical constants/structure to [[Stats.pTwoSided]]).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 import graft.operators.{Dedup, Similarity, Terms}
+import graft.SfTables.{load => t}
 
 /** Round-4 training-pipeline additions: the three dedup/curation shapes a
   * web-scale corpus pipeline runs that were not yet first-class — line-level
@@ -20,9 +21,6 @@ import graft.operators.{Dedup, Similarity, Terms}
   * oracle replaying every downstream step over the dump.
   */
 object QueriesR4 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** The documents corpus has no newlines, so the line-dedup query derives
     * deterministic line boundaries first: every aligned run of 4 tokens is

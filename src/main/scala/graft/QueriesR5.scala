@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 import graft.operators.{Caches, Curation, Quality, Sampling}
+import graft.SfTables.{load => t}
 
 /** Round-5 additions: the heuristic + model-based quality-filtering layer
   * of the modern curation stack.
@@ -32,9 +33,6 @@ import graft.operators.{Caches, Curation, Quality, Sampling}
   * on the planted pattern.
   */
 object QueriesR5 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   private val Dim = 4096
   private val LabelMinTokens = 40

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOf, Stats, Windows}
+import graft.SfTables.{load => t}
 
 /** Relational operator queries (SURVEY.md §2.2–§2.7) over the driver's
   * TPC-H-ish testdata, each with a DuckDB oracle in [[QueriesRel.oracle]].
@@ -18,9 +19,6 @@ import graft.operators.{AsOf, Stats, Windows}
   *  - integer sums are cast to BIGINT on both sides (DuckDB sums to HUGEINT).
   */
 object QueriesRel {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
 

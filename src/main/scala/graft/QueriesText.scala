@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.functions.Text
 import graft.operators.{Dedup, Similarity}
+import graft.SfTables.{load => t}
 
 /** Text-analysis, deduplication, and similarity-search queries over the
   * `documents` and `embeddings` tables (training-data pipeline operators),
@@ -14,9 +15,6 @@ import graft.operators.{Dedup, Similarity}
   * oracle-free and verified by dedicated ScalaTest suites instead.
   */
 object QueriesText {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** 30 stopwords as a DuckDB list literal (kept in sync with Corpus.Stopwords). */
   private val swList: String =

@@ -735,8 +735,9 @@ object SnapshotTable {
       val stage = newStage(root, p.id + 1)
       val folded = p.folded
       // ONE job for all compacted buckets (not a driver loop of per-bucket
-      // jobs): union per bucket, one shuffle hash-partitioned by bucket, one
-      // sorted file per bucket out of partitionBy
+      // jobs): one scan per stage dir the slices live in, one shuffle
+      // hash-partitioned by bucket, one sorted file per bucket out of
+      // partitionBy
       readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.mixedSchema)
         .foreach { df =>
           df.repartition(toCompact.size, col(BucketCol))
@@ -771,24 +772,41 @@ object SnapshotTable {
       s"compact lost the optimistic claim $MaxCommitAttempts times at $root")
   }
 
-  /** One multi-path scan per BUCKET (not per slice): the union tree is
-    * O(buckets) wide regardless of how many append slices accumulated, so
-    * the logical plan stays small under long append histories.
-    * `mixed` (from the snapshot's [[Snapshot.mixedSchema]]): slices written
-    * before an additive schema evolution lack the newer columns — parquet
-    * schema-merging + union-by-name-with-nulls reconciles them. That merge
-    * reads a footer per FILE at planning, so it is paid only when the
-    * manifest says slices can actually disagree; the homogeneous common
-    * case keeps single-footer schema inference.
+  /** The one scan every read and rewrite path opens data through. The
+    * schema is inferred ONCE per call — one footer-reading job — and every
+    * slice is then read with it plus [[BucketCol]] as an int:
+    *  - `mixed` (from the snapshot's [[Snapshot.mixedSchema]]): slices
+    *    written before an additive schema evolution lack the newer columns,
+    *    so the schema is parquet's merge over every slice's footers, and an
+    *    old slice reads null in the columns it lacks. The merge reads a
+    *    footer per FILE, so it is paid only when the manifest says slices
+    *    can actually disagree; otherwise one slice's footer gives the schema.
+    *  - One multi-path scan per distinct STAGE dir, with the stage as
+    *    `basePath`, so [[BucketCol]] comes from the slices' real
+    *    `pbucket=k` directory names. A single `basePath` of `<root>/data`
+    *    does not work: Spark rejects the paths of two stages as
+    *    conflicting directory structures.
+    * The union is as wide as the number of distinct stage dirs — one per
+    * commit whose slices are still referenced — and regular [[compact]]
+    * calls keep that near `maxSlices` + 1 however many appends accumulate.
     */
   private def readSlices(spark: SparkSession, slices: Seq[BucketManifest],
-      mixed: Boolean = false): Option[DataFrame] =
-    slices.filter(_.rows > 0).groupBy(_.bucket).toSeq.sortBy(_._1)
-      .map { case (k, ss) =>
-        val r = if (mixed) spark.read.option("mergeSchema", "true") else spark.read
-        r.parquet(ss.map(_.dir).distinct: _*).withColumn(BucketCol, lit(k))
-      }
-      .reduceOption(_.unionByName(_, allowMissingColumns = mixed))
+      mixed: Boolean = false): Option[DataFrame] = {
+    val dirs = slices.filter(_.rows > 0).map(_.dir).distinct
+    if (dirs.isEmpty) None
+    else {
+      val inferred =
+        if (mixed) spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+        else spark.read.parquet(dirs.head)
+      val schema = inferred.schema
+        .add(BucketCol, org.apache.spark.sql.types.IntegerType)
+      Some(dirs.groupBy(d => Paths.get(d).getParent.toString).toSeq.sortBy(_._1)
+        .map { case (stage, ds) =>
+          spark.read.schema(schema).option("basePath", stage).parquet(ds: _*)
+        }
+        .reduce(_ union _))
+    }
+  }
 
   /** Pad `df` with any recorded column it lacks, as typed nulls — a
     * mixed-schema scan may have touched only pre-evolution slices (e.g. a

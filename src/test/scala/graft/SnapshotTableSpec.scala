@@ -867,4 +867,106 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(digestOf(got.select(df.columns.map(col): _*)) ==
       digestOf(df.filter(col("event_ms").between(350, 449))))
   }
+
+  /** Spark jobs `body` starts, counted by a listener on their job group. A
+    * fence job runs after `body`: the listener bus delivers events in
+    * order, so once the fence is seen every earlier job start was too.
+    */
+  private def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime}"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => started.incrementAndGet()
+          case Some(g) if g == s"$group-fence" => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the fence job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    started.get()
+  }
+
+  private def fileScans(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+    plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size
+
+  test("read infers its schema in one job and plans one parquet scan per stage dir") {
+    val root = tmpRoot("scans")
+    val ev = Corpus.events(spark, Corpus.Params(rows = 4000, entities = 256)).drop("bytes")
+    SnapshotTable.commit(ev.filter(col("seq") < 3000), root, "entity_id", "event_ms",
+      buckets = 16)
+    assert(SnapshotTable.currentSnapshot(root).get.buckets.map(_.bucket).toSet.size == 16,
+      "fixture degenerate: some bucket holds no rows")
+    // planning only — no action — may start at most the one schema job
+    var plan: org.apache.spark.sql.execution.SparkPlan = null
+    val jobs = jobsStarted {
+      plan = SnapshotTable.read(spark, root).queryExecution.executedPlan
+    }
+    assert(jobs <= 1, s"read started $jobs Spark jobs before its first action")
+    assert(fileScans(plan) == 1, s"16 buckets of one commit must be one scan:\n$plan")
+
+    // an append adds a second stage dir: one scan each, never one per bucket
+    SnapshotTable.commitDelta(ev.filter(col("seq") >= 3000), root, "entity_id",
+      "event_ms", buckets = 16)
+    val stages = SnapshotTable.currentSnapshot(root).get.buckets
+      .map(b => Paths.get(b.dir).getParent).toSet.size
+    assert(stages == 2)
+    val back = SnapshotTable.read(spark, root)
+    assert(fileScans(back.queryExecution.executedPlan) == stages)
+    assert(back.count() == 4000)
+    assert(back.groupBy(SnapshotTable.BucketCol).count().count() == 16)
+  }
+
+  test("read's schema is the committed frame's column order, then pbucket: int") {
+    import spark.implicits._
+    // deliberately unsorted: the manifest records sorted `columns`, and
+    // read must not take its order from there
+    val base = Seq((10L, "e1", "a", 1), (20L, "e2", "b", 2), (30L, "e3", "c", 3))
+      .toDF("event_ms", "entity_id", "v", "n")
+    val later = Seq((40L, "e1", "d", 4), (50L, "e2", "e", 5)).toDF(base.columns: _*)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    def withBucket(df: org.apache.spark.sql.DataFrame) =
+      shape(df) :+ (SnapshotTable.BucketCol -> org.apache.spark.sql.types.IntegerType)
+    def table(tag: String): String = {
+      val root = tmpRoot(tag)
+      SnapshotTable.commit(base, root, "entity_id", "event_ms", buckets = 4)
+      root
+    }
+    def append(root: String, df: org.apache.spark.sql.DataFrame, evolve: Boolean = false) =
+      SnapshotTable.commitDelta(df, root, "entity_id", "event_ms", buckets = 4,
+        evolveSchema = evolve)
+
+    val once = table("shape-once")
+    assert(SnapshotTable.currentSnapshot(once).get.columns != base.columns.toSeq)
+    val appended = table("shape-append")
+    append(appended, later)
+    val compacted = table("shape-compact")
+    append(compacted, later)
+    val cid = SnapshotTable.compact(spark, compacted, maxSlices = 1)
+    assert(cid == 2L, "fixture degenerate: nothing was compacted")
+    Seq("once" -> once, "append" -> appended, "compacted" -> compacted).foreach {
+      case (tag, root) =>
+        assert(shape(SnapshotTable.read(spark, root)) == withBucket(base), tag)
+    }
+
+    val evolved = table("shape-evolved")
+    val scored = later.withColumn("score", lit(0.5))
+    append(evolved, scored, evolve = true)
+    assert(SnapshotTable.currentSnapshot(evolved).get.mixedSchema)
+    assert(shape(SnapshotTable.read(spark, evolved)) == withBucket(scored))
+  }
 }
