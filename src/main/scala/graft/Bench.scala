@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.corpus.Corpus
 import graft.features.FeaturePipeline
@@ -42,11 +43,12 @@ import graft.features.FeaturePipeline
   *    the cross-level determinism check;
   *  - shuffle scratch lives on tmpfs: the one resource a real cluster
   *    would NOT share across executors is this box's scratch disk.
-  * Also writes the human-readable scaling table to BENCH.md.
+  * Also writes the human-readable scaling table to BENCH.md, next to the
+  * BENCH.json copy of the JSON line, in the working directory.
   */
 object Bench {
 
-  private val HeadlineQueries = Seq(
+  private[graft] val HeadlineQueries = Seq(
     "q1_pricing_summary", "j1_inner_join", "j8_asof_join", "w_sessionize",
     "w_backfill", "w1_topk_per_group", "a1_replicate_summary", "a10_spearman",
     "f10_zscore_trainonly", "txt_token_stats", "txt_langid", "dd_exact",
@@ -77,12 +79,13 @@ object Bench {
     * partitions to the data and give the small level proportionally fewer
     * scheduling waves than the big one).
     */
-  private def session(cores: Int, coalesce: Boolean = false): SparkSession = {
+  private[graft] def session(cores: Int, coalesce: Boolean = false,
+      app: String = "graft-bench"): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
+      .appName(s"$app-$cores")
       .config("spark.sql.shuffle.partitions", CorpusShufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
@@ -126,12 +129,23 @@ object Bench {
     path
   }
 
+  /** The honest sink every timed run ends in: hash-aggregate EVERY output
+    * column (a bare count() lets Catalyst prune deterministic projections,
+    * so projection-only work would bench as scan+count). Returns the row
+    * (rows, digest) — the digest is the order-insensitive bit_xor of the
+    * per-row xxhash64.
+    */
+  private[graft] def sink(df: DataFrame): Row = {
+    val rowHash = df.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
+    df.select(rowHash.as("__h"))
+      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("digest")).head()
+  }
+
   /** One timed feature-pipeline run over the materialized corpus table;
     * returns (seconds, featureRows, digest). Shared with [[BenchCluster]]
     * (the spark-submit multi-JVM harness).
     */
   private[graft] def corpusRun(spark: SparkSession, path: String, rows: Long): (Double, Long, Long) = {
-    import org.apache.spark.sql.functions._
     val p = Corpus.Params(rows = rows, entities = math.max(64, (rows / 2000).toInt))
     // time bounds are a pure function of the generator params — the
     // local-mode stand-in for reading them from table/partition metadata
@@ -143,11 +157,7 @@ object Bench {
     val dim = Corpus.dimFeatures(spark, p.seed)
     val ed = FeaturePipeline.entityDim(spark, p.entities)
     val f = FeaturePipeline.featuresSkewSafe(ev, dim, ed, bounds = Some(bounds))
-    // honest sink: hash-aggregate over EVERY output column so no feature
-    // computation can be pruned away
-    val rowHash = f.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
-    val agg = f.select(rowHash.as("__h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("digest")).head()
+    val agg = sink(f)
     val dt = (System.nanoTime() - t0) / 1e9
     FeaturePipeline.releaseCaches()
     (dt, agg.getLong(0), agg.getLong(1))
@@ -173,11 +183,12 @@ object Bench {
     } finally s.stop()
   }
 
-  /** Jar the compiled classes (Spark itself comes from the distribution) so
+  /** Jar the compiled classes (sbt's `target/scala-2.13/classes` under the
+    * working directory; Spark itself comes from the distribution) so
     * spark-submit can ship them to local-cluster executor JVMs.
     */
   private def classesJar(): Option[String] = {
-    val classes = Paths.get("/root/repo/target/scala-2.13/classes")
+    val classes = Paths.get("target/scala-2.13/classes").toAbsolutePath
     if (!Files.exists(classes.resolve("graft/BenchCluster.class"))) return None
     Files.createDirectories(Paths.get("/dev/shm/graft-bench"))
     val jar = "/dev/shm/graft-bench/graft-classes.jar"
@@ -462,19 +473,10 @@ object Bench {
     val results = headline.map { name =>
       val fn = SparkEntry.queries(name)
       def once(): Double = {
-        import org.apache.spark.sql.functions._
         val t0 = System.nanoTime()
         // each run pays its own operator-internal cache population (released
-        // after), so the timing is the query's honest standalone cost; the
-        // sink hash-aggregates EVERY output column (round-2 fix: a bare
-        // count() let Catalyst prune deterministic projections, so
-        // projection-only queries benched as scan+count)
-        try {
-          val df = fn(spark, sfDir)
-          val h = df.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
-          df.select(h.as("__h"))
-            .agg(count(lit(1)), expr("bit_xor(__h)")).head()
-        }
+        // after), so the timing is the query's honest standalone cost
+        try sink(fn(spark, sfDir))
         finally graft.operators.Caches.releaseAll()
         (System.nanoTime() - t0) / 1e9
       }
@@ -501,7 +503,7 @@ object Bench {
     // The r4 bench wrote its JSON once at exit; the driver's wall-budget
     // kill therefore erased EVERY finished part ("parsed": null — no
     // authoritative artifact that round). Now each finished part re-emits
-    // the full JSON line (stdout AND /root/repo/BENCH.json) with
+    // the full JSON line (stdout AND BENCH.json in the working dir) with
     // "complete":false until the last part lands, so ANY prefix of the run
     // is a parseable artifact and the last emitted line is the best one.
     val qs = results.map { case (k, v) =>
@@ -524,7 +526,7 @@ object Bench {
           multiJvmJson.map(s => s""",$s""").getOrElse("") + "}"
       println(json)
       // sbt prefixes forked stdout with [info]; keep a clean copy on disk
-      try Files.writeString(Paths.get("/root/repo/BENCH.json"), json + "\n")
+      try Files.writeString(Paths.get("BENCH.json"), json + "\n")
       catch { case _: Throwable => }
     }
 
@@ -690,7 +692,7 @@ object Bench {
          |${results.map { case (k, v) => if (v.isNaN) s"| $k | ERR |" else f"| $k | $v%.3f |" }.mkString("| query | sec |\n|---|---|\n", "\n", "")}
          |${if (errors.nonEmpty) errors.map { case (k, m) => s"- ERROR $k: $m" }.mkString("\n", "\n", "\n") else ""}
          |""".stripMargin
-    try Files.writeString(Paths.get("/root/repo/BENCH.md"), md)
+    try Files.writeString(Paths.get("BENCH.md"), md)
     catch { case _: Throwable => }
     }
     scalingJson = Some(

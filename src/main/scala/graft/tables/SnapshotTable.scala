@@ -1,9 +1,9 @@
 package graft.tables
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -97,58 +97,30 @@ object SnapshotTable {
       }
   }
 
-  // --- tiny hand-rolled JSON (no extra deps; schema is fixed) --------------
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+  /** Per-bucket (rows, watermark, digest, tmin) of one commit's data. */
+  private type Stats = (Long, Long, Long, Long)
 
-  /** Inverse of [[esc]]: strings must ROUND-TRIP through the manifest —
-    * a root path or column name containing `"` or `\` would otherwise be
-    * written escaped but read back truncated at the first escape.
+  // --- manifest codec --------------------------------------------------------
+  private val Json = new ObjectMapper()
+
+  /** Compact JSON; the field order is part of the format (legacy-manifest
+    * tooling edits manifests by regex).
     */
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
+  private[graft] def toJson(s: Snapshot): String = {
+    val o = Json.createObjectNode()
+      .put("id", s.id).put("parent", s.parent).put("entity_col", s.entityCol)
+      .put("time_col", s.timeCol).put("nbuckets", s.nbuckets)
+      .put("batch_id", s.batchId).put("mixed_schema", s.mixedSchema)
+      .put("schema_ddl", s.schemaDdl)
+    val cols = o.putArray("columns")
+    s.columns.foreach(c => cols.add(c))
+    val bs = o.putArray("buckets")
+    s.buckets.sortBy(b => (b.bucket, b.dir)).foreach { b =>
+      bs.addObject().put("bucket", b.bucket).put("dir", b.dir).put("rows", b.rows)
+        .put("watermark", b.watermark).put("digest", b.digest).put("tmin", b.tmin)
     }
-    sb.toString
+    Json.writeValueAsString(o)
   }
-
-  /** `"..."` with escape-aware interior (backslash-pair or any non-quote). */
-  private val JsonStr = "\"(?:[^\"\\\\]|\\\\.)*\""
-
-  private def toJson(s: Snapshot): String = {
-    val bs = s.buckets.sortBy(b => (b.bucket, b.dir)).map { b =>
-      s"""{"bucket":${b.bucket},"dir":"${esc(b.dir)}","rows":${b.rows},""" +
-        s""""watermark":${b.watermark},"digest":${b.digest},"tmin":${b.tmin}}"""
-    }.mkString("[", ",", "]")
-    val cols = s.columns.map(c => s""""${esc(c)}"""").mkString("[", ",", "]")
-    s"""{"id":${s.id},"parent":${s.parent},"entity_col":"${esc(s.entityCol)}",""" +
-      s""""time_col":"${esc(s.timeCol)}","nbuckets":${s.nbuckets},""" +
-      s""""batch_id":${s.batchId},"mixed_schema":${s.mixedSchema},""" +
-      s""""schema_ddl":"${esc(s.schemaDdl)}","columns":$cols,"buckets":$bs}"""
-  }
-
-  private def stripQuotes(v: String): String =
-    if (v.startsWith("\"")) unesc(v.stripPrefix("\"").stripSuffix("\"")) else v
-
-  private def field(json: String, name: String): String = {
-    val m = (s""""$name":($JsonStr|-?\\d+|true|false)""").r.findFirstMatchIn(json)
-      .getOrElse(throw new IllegalStateException(s"missing field $name in manifest"))
-    stripQuotes(m.group(1))
-  }
-
-  private def fieldOpt(json: String, name: String): Option[String] =
-    (s""""$name":($JsonStr|-?\\d+|true|false)""").r.findFirstMatchIn(json)
-      .map(m => stripQuotes(m.group(1)))
 
   /** Parse a manifest. `nbuckets`/`batch_id`/`columns` arrived with the
     * round-3 slice format; manifests written by the earlier format stay
@@ -157,49 +129,26 @@ object SnapshotTable {
     * present can under-count; the next append's caller-supplied count is
     * authoritative, exactly the pre-upgrade contract), batchId = -1 ("not
     * a streaming commit"), columns empty (= skip the schema check on
-    * append).
+    * append). A truncated manifest fails to parse.
     */
-  /** Substring of the `[...]` array following offset `from`, delimited by
-    * the first `]` NOT inside a string literal (column names and dir paths
-    * may legally contain `]`, `{`, `}`, quotes and backslashes).
-    */
-  private def arrayBody(json: String, from: Int): String = {
-    var i = json.indexOf('[', from) + 1
-    val start = i
-    var inStr = false
-    while (i < json.length && (inStr || json.charAt(i) != ']')) {
-      json.charAt(i) match {
-        case '\\' if inStr => i += 1 // skip the escaped char
-        case '"'           => inStr = !inStr
-        case _             =>
-      }
-      i += 1
-    }
-    json.substring(start, i)
-  }
-
-  private def fromJson(json: String): Snapshot = {
-    val cols = json.indexOf("\"columns\":") match {
-      case -1 => Seq.empty[String]
-      case i  => JsonStr.r.findAllIn(arrayBody(json, i)).map(stripQuotes).toSeq
-    }
-    val bucketsPart = arrayBody(json, json.indexOf("\"buckets\":"))
-    val items = (s"""\\{(?:$JsonStr|[^{}"])*\\}""").r.findAllIn(bucketsPart).toSeq
-    val buckets = items.map(it =>
-      BucketManifest(field(it, "bucket").toInt, field(it, "dir"),
-        field(it, "rows").toLong, field(it, "watermark").toLong,
-        field(it, "digest").toLong,
-        // absent before the range-pruning format: no lower-bound claim
-        fieldOpt(it, "tmin").map(_.toLong).getOrElse(Long.MinValue)))
-    val nbuckets = fieldOpt(json, "nbuckets").map(_.toInt).getOrElse(-1)
+  private[graft] def fromJson(json: String): Snapshot = {
+    val o = Json.readTree(json)
+    def req(n: JsonNode, name: String): JsonNode = Option(n.get(name))
+      .getOrElse(throw new IllegalStateException(s"missing field $name in manifest"))
+    def opt(n: JsonNode, name: String): Option[JsonNode] = Option(n.get(name))
     Snapshot(
-      field(json, "id").toLong, field(json, "parent").toLong,
-      field(json, "entity_col"), field(json, "time_col"),
-      nbuckets, fieldOpt(json, "batch_id").map(_.toLong).getOrElse(-1L),
-      cols, buckets,
+      req(o, "id").asLong, req(o, "parent").asLong,
+      req(o, "entity_col").asText, req(o, "time_col").asText,
+      opt(o, "nbuckets").fold(-1)(_.asInt), opt(o, "batch_id").fold(-1L)(_.asLong),
+      opt(o, "columns").fold(Seq.empty[String])(_.asScala.map(_.asText).toSeq),
+      req(o, "buckets").asScala.map(b =>
+        BucketManifest(req(b, "bucket").asInt, req(b, "dir").asText,
+          req(b, "rows").asLong, req(b, "watermark").asLong, req(b, "digest").asLong,
+          // absent before the range-pruning format: no lower-bound claim
+          opt(b, "tmin").fold(Long.MinValue)(_.asLong))).toSeq,
       // absent in pre-evolution manifests = homogeneous (they couldn't mix)
-      fieldOpt(json, "mixed_schema").contains("true"),
-      fieldOpt(json, "schema_ddl").getOrElse(""))
+      opt(o, "mixed_schema").exists(_.asBoolean),
+      opt(o, "schema_ddl").fold("")(_.asText))
   }
 
   // --- pointer --------------------------------------------------------------
@@ -227,6 +176,27 @@ object SnapshotTable {
   def currentSnapshot(root: String): Option[Snapshot] =
     currentId(root).map(snapshot(root, _))
 
+  /** Snapshot `id`, else the current one; throws on a table with none. */
+  private def resolve(root: String, id: Option[Long]): Snapshot =
+    id.map(snapshot(root, _)).orElse(currentSnapshot(root))
+      .getOrElse(throw noSnapshot(root))
+
+  private def noSnapshot(root: String) =
+    new IllegalStateException(s"no snapshot at $root")
+
+  /** Every manifest under `root`, by id (empty when there is none). */
+  private def allSnapshots(root: String): Seq[Snapshot] = {
+    val dir = Paths.get(root, "snapshots")
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val st = Files.list(dir)
+      try st.iterator().asScala
+        .filter(_.getFileName.toString.matches("v\\d+\\.json"))
+        .map(p => fromJson(Files.readString(p))).toSeq.sortBy(_.id)
+      finally st.close()
+    }
+  }
+
   private def swapPointer(root: String, id: Long): Unit = {
     val dir = Paths.get(root)
     Files.createDirectories(dir)
@@ -250,7 +220,7 @@ object SnapshotTable {
     * Long.MinValue ("no lower-bound claim").
     */
   private def bucketStats(df: DataFrame, dataCols: Seq[String],
-      timeCol: String): Map[Int, (Long, Long, Long, Long)] = {
+      timeCol: String): Map[Int, Stats] = {
     val rowHash = xxhash64(to_json(struct(dataCols.sorted.map(col): _*),
       Map("timeZone" -> "UTC").asJava))
     df.withColumn("__h", rowHash)
@@ -315,14 +285,69 @@ object SnapshotTable {
     } finally Files.deleteIfExists(tmp): Unit
   }
 
-  /** Claim + pointer swap. None = lost the race; the caller re-reads the
-    * head and retries.
-    */
-  private def publish(root: String, snap: Snapshot): Option[Long] =
-    if (!claimManifest(root, snap)) None
-    else { swapPointer(root, snap.id); Some(snap.id) }
-
   private val MaxCommitAttempts = 10
+
+  /** The optimistic-commit protocol every writer runs: read the head, let
+    * `next` build the snapshot to claim on top of it, claim it and swap the
+    * pointer. A lost claim re-reads the new head and calls `next` again, up
+    * to [[MaxCommitAttempts]] times. `next` returns `Left(id)` to finish
+    * without a commit (an idempotent replay, or nothing to do).
+    */
+  private def commitLoop(root: String, what: String)(
+      next: Option[Snapshot] => Either[Long, Snapshot]): Long = {
+    var attempt = 0
+    while (attempt < MaxCommitAttempts) {
+      next(currentSnapshot(root)) match {
+        case Left(id) => return id
+        case Right(snap) =>
+          if (claimManifest(root, snap)) { swapPointer(root, snap.id); return snap.id }
+          attempt += 1 // lost the claim: re-read head, retry
+      }
+    }
+    throw new IllegalStateException(
+      s"$what lost the optimistic claim $MaxCommitAttempts times at $root " +
+        "— a writer is committing faster than this one can retry")
+  }
+
+  /** The sorted, bucket-partitioned stage write every writer goes through. */
+  private def writeStage(df: DataFrame, stage: Path, sortBy: String*): Unit =
+    df.sortWithinPartitions(sortBy.map(col): _*)
+      .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+
+  /** Manifest entry of bucket `k`'s slice in `stage`. */
+  private def slice(k: Int, stage: Path, st: Stats): BucketManifest =
+    BucketManifest(k, s"$stage/$BucketCol=$k", st._1, st._2, st._3, st._4)
+
+  /** Rewrite the `touched` buckets of `p` as `content` (a frame carrying
+    * [[BucketCol]]): one stage write hash-partitioned by bucket, then ONE
+    * stats scan of the staged parquet hashing `dataCols` — never the
+    * untouched buckets, whose slices carry over verbatim. A touched bucket
+    * left without rows drops out of the manifest. Touched buckets are
+    * rewritten on the full recorded schema (`content` is conformed), so
+    * only untouched ones can still hold old-schema slices.
+    */
+  private def rewriteBuckets(spark: SparkSession, root: String, p: Snapshot,
+      touched: Set[Int], content: DataFrame, dataCols: Seq[String]): Snapshot = {
+    val stage = newStage(root, p.id + 1)
+    writeStage(content.repartition(math.max(1, touched.size), col(BucketCol)),
+      stage, BucketCol, p.entityCol, p.timeCol)
+    val hasData = {
+      // an all-rows-deleted stage has no bucket dirs to scan
+      val st = Files.list(stage)
+      try st.anyMatch(q => q.getFileName.toString.startsWith(s"$BucketCol="))
+      finally st.close()
+    }
+    val stats =
+      if (hasData) bucketStats(spark.read.parquet(stage.toString), dataCols, p.timeCol)
+      else Map.empty[Int, Stats]
+    val bySlices = p.buckets.groupBy(_.bucket)
+    val buckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
+      if (touched.contains(k)) stats.get(k).map(slice(k, stage, _)).toSeq
+      else bySlices(k)
+    }
+    p.copy(id = p.id + 1, parent = p.id, buckets = buckets,
+      mixedSchema = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_)))
+  }
 
   /** Type-aware schema rail: the name-equality checks alone let a column's
     * TYPE change slip through (e.g. v: Int re-appended as v: Long), mixing
@@ -362,21 +387,19 @@ object SnapshotTable {
       buckets: Int = 16, batchId: Long = -1L,
       evolveSchema: Boolean = false): Long = {
     val df = df0.withColumn(BucketCol, bucketExpr(entityCol, buckets))
+    val cols = df0.columns.sorted.toSeq
     // ONE stats scan of df, reused across optimistic retries (the diff and
     // the changed-bucket write depend on the parent, so those rerun)
-    var man: Map[Int, (Long, Long, Long, Long)] = null
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val parent = currentSnapshot(root)
+    lazy val man = bucketStats(df, df0.columns.toSeq, timeCol)
+    commitLoop(root, "commit") { parent =>
       parent.foreach { p =>
         // nbuckets < 0 = pre-slice-format manifest with no recorded count:
         // accept the caller's, which the new manifest then records
         require(p.nbuckets < 0 || p.nbuckets == buckets,
           s"bucket count $buckets != table's ${p.nbuckets} at $root")
         // empty = pre-slice-format manifest without a recorded schema: skip
-        require(evolveSchema || p.columns.isEmpty ||
-          p.columns == df0.columns.sorted.toSeq,
-          s"schema ${df0.columns.sorted.toSeq} != table's ${p.columns} at " +
+        require(evolveSchema || p.columns.isEmpty || p.columns == cols,
+          s"schema $cols != table's ${p.columns} at " +
             s"$root (pass evolveSchema = true to change it)")
         // an evolving full commit rewrites every slice, so new types are
         // fine there; a plain commit must not mutate a column's type (the
@@ -387,60 +410,45 @@ object SnapshotTable {
         require(p.entityCol == entityCol && p.timeCol == timeCol,
           s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol}) at $root")
       }
-      if (batchId >= 0 && parent.exists(_.batchId == batchId))
-        return parent.get.id // idempotent replay of an already-committed batch
+      parent.filter(p => batchId >= 0 && p.batchId == batchId) match {
+        case Some(p) => Left(p.id) // idempotent replay of an already-committed batch
+        case None =>
+          val parentFolded = parent.map(_.folded).getOrElse(Map.empty)
+          val parentSlices = parent.map(_.buckets.groupBy(_.bucket)).getOrElse(Map.empty)
+          val newId = parent.map(_.id + 1).getOrElse(0L)
 
-      if (man == null) man = bucketStats(df, df0.columns.toSeq, timeCol)
+          // a bucket is unchanged only if digest AND row count AND watermark
+          // all match the parent's folded manifest: bit_xor alone cancels
+          // pairs, so adding two identical rows (exact duplicates are central
+          // to this corpus) would otherwise leave the digest unchanged and
+          // silently drop the new rows
+          // tmin is deliberately OUTSIDE the equality (folded is (rows, wm,
+          // digest)): a parent slice carried from a pre-tmin manifest would
+          // otherwise never compare equal and the resume path would rewrite
+          // it on every commit
+          val changed = man.filter { case (k, (rows, wm, dg, _)) =>
+            !parentFolded.get(k).contains((rows, wm, dg))
+          }.keys.toSeq.sorted
 
-      val parentFolded: Map[Int, (Long, Long, Long)] =
-        parent.map(_.folded).getOrElse(Map.empty)
-      val parentSlices: Map[Int, Seq[BucketManifest]] =
-        parent.map(_.buckets.groupBy(_.bucket)).getOrElse(Map.empty)
-      val newId = parent.map(_.id + 1).getOrElse(0L)
-
-      // a bucket is unchanged only if digest AND row count AND watermark all
-      // match the parent's folded manifest: bit_xor alone cancels pairs, so
-      // adding two identical rows (exact duplicates are central to this
-      // corpus) would otherwise leave the digest unchanged and silently drop
-      // the new rows
-      // tmin is deliberately OUTSIDE the equality (folded is (rows, wm,
-      // digest)): a parent slice carried from a pre-tmin manifest would
-      // otherwise never compare equal and the resume path would rewrite it
-      // on every commit
-      val changed = man.filter { case (k, (rows, wm, dg, _)) =>
-        !parentFolded.get(k).contains((rows, wm, dg))
-      }.keys.toSeq.sorted
-
-      val stage = newStage(root, newId)
-      if (changed.nonEmpty) {
-        df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*))
-          .sortWithinPartitions(col(entityCol), col(timeCol))
-          .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-      }
-
-      val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, (rows, wm, dg, tmn)) =>
-        if (changed.contains(k))
-          Seq(BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn))
-        else parentSlices(k)
-      }
-      // slices can disagree on schema only if some parent slice was CARRIED
-      // (resume path) and either the parent already mixed or this commit
-      // changed the column set; a full rewrite (changed == all) clears it
-      val schemaChanged = parent.exists(p =>
-        p.columns.nonEmpty && p.columns != df0.columns.sorted.toSeq)
-      val mixed = changed.size < man.size &&
-        (parent.exists(_.mixedSchema) || schemaChanged)
-      publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
-        entityCol, timeCol, buckets, batchId, df0.columns.sorted.toSeq,
-        newBuckets, mixed,
-        df0.select(df0.columns.sorted.map(col): _*).schema.toDDL)) match {
-        case Some(id) => return id
-        case None     => attempt += 1 // lost the claim: re-read head, retry
+          val stage = newStage(root, newId)
+          if (changed.nonEmpty)
+            writeStage(df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*)),
+              stage, entityCol, timeCol)
+          val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
+            if (changed.contains(k)) Seq(slice(k, stage, st)) else parentSlices(k)
+          }
+          // slices can disagree on schema only if some parent slice was
+          // CARRIED (resume path) and either the parent already mixed or this
+          // commit changed the column set; a full rewrite (changed == all)
+          // clears it
+          val schemaChanged = parent.exists(p => p.columns.nonEmpty && p.columns != cols)
+          val mixed = changed.size < man.size &&
+            (parent.exists(_.mixedSchema) || schemaChanged)
+          Right(Snapshot(newId, parent.map(_.id).getOrElse(-1L), entityCol, timeCol,
+            buckets, batchId, cols, newBuckets, mixed,
+            df0.select(cols.map(col): _*).schema.toDDL))
       }
     }
-    throw new IllegalStateException(
-      s"commit lost the optimistic claim $MaxCommitAttempts times at $root " +
-        "— a writer is committing faster than this one can retry")
   }
 
   /** APPEND `delta` as a new snapshot costing O(delta): only the delta is
@@ -472,77 +480,57 @@ object SnapshotTable {
       timeCol: String, buckets: Int = 16, batchId: Long = -1L,
       evolveSchema: Boolean = false): Long = {
     val df = delta.withColumn(BucketCol, bucketExpr(entityCol, buckets))
+    val deltaCols = delta.columns.sorted.toSeq
     // the delta's slices are PARENT-INDEPENDENT: scanned and staged at most
     // once, then reused verbatim across optimistic retries (only the
     // manifest's id/parent change when a concurrent writer wins a claim)
-    var man: Map[Int, (Long, Long, Long, Long)] = null
-    var deltaSlices: Seq[BucketManifest] = null
-    def stageOnce(newIdHint: Long): Unit = if (man == null) {
-      man = bucketStats(df, delta.columns.toSeq, timeCol)
-      deltaSlices =
-        if (man.isEmpty) Seq.empty
-        else {
-          val stage = newStage(root, newIdHint)
-          df.sortWithinPartitions(col(entityCol), col(timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-          man.toSeq.sortBy(_._1).map { case (k, (rows, wm, dg, tmn)) =>
-            BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn)
-          }
-        }
+    var staged: Option[Seq[BucketManifest]] = None
+    def stageOnce(newIdHint: Long): Seq[BucketManifest] = staged.getOrElse {
+      val man = bucketStats(df, delta.columns.toSeq, timeCol)
+      val stage = newStage(root, newIdHint)
+      if (man.nonEmpty) writeStage(df, stage, entityCol, timeCol)
+      val slices = man.toSeq.sortBy(_._1).map { case (k, st) => slice(k, stage, st) }
+      staged = Some(slices)
+      slices
     }
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      currentSnapshot(root) match {
-        case None =>
-          // empty table: try to create v0 holding exactly the delta. Losing
-          // this claim means a concurrent writer created the table — the
-          // next iteration takes the APPEND path against it (delegating to
-          // commit here would retry with overwrite semantics and erase the
-          // winner's rows)
-          stageOnce(0L)
-          publish(root, Snapshot(0L, -1L, entityCol, timeCol, buckets,
-            batchId, delta.columns.sorted.toSeq, deltaSlices, false,
-            delta.select(delta.columns.sorted.map(col): _*).schema.toDDL)) match {
-            case Some(id) => return id
-            case None     => attempt += 1
-          }
-        case Some(p) =>
-          if (batchId >= 0 && p.batchId == batchId) return p.id
-          require(p.nbuckets < 0 || p.nbuckets == buckets,
-            s"bucket count $buckets != table's ${p.nbuckets} at $root")
-          require(p.entityCol == entityCol && p.timeCol == timeCol,
-            s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol})")
-          val deltaCols = delta.columns.sorted.toSeq
-          if (evolveSchema)
-            require(p.columns.forall(deltaCols.contains),
-              s"schema evolution on append is ADDITIVE only: delta $deltaCols " +
-                s"is missing recorded columns ${p.columns.filterNot(deltaCols.contains)}")
-          else
-            require(p.columns.isEmpty || p.columns == deltaCols,
-              s"delta schema $deltaCols != table's ${p.columns} " +
-                "(pass evolveSchema = true to add columns)")
-          requireTypesMatch(p, delta, "delta")
-          stageOnce(p.id + 1)
-          if (man.isEmpty) return p.id // empty delta: nothing to commit
-          val cols = if (p.columns.isEmpty) p.columns else deltaCols
-          val mixed = p.mixedSchema ||
-            (p.columns.nonEmpty && p.columns != deltaCols)
-          // legacy manifests (no recorded columns) keep their (empty) DDL;
-          // otherwise the delta's — equal on a plain append, WIDENED under
-          // evolution, which is exactly what mixed reads must pad to
-          val ddl =
-            if (p.columns.isEmpty) p.schemaDdl
-            else delta.select(deltaCols.map(col): _*).schema.toDDL
-          publish(root, Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets,
-            batchId, cols, p.buckets ++ deltaSlices, mixed, ddl)) match {
-            case Some(id) => return id
-            case None     => attempt += 1
-          }
-      }
+    // legacy manifests (no recorded columns) keep their (empty) DDL;
+    // otherwise the delta's — equal on a plain append, WIDENED under
+    // evolution, which is exactly what mixed reads must pad to
+    def ddl = delta.select(deltaCols.map(col): _*).schema.toDDL
+    commitLoop(root, "commitDelta") {
+      case None =>
+        // empty table: try to create v0 holding exactly the delta. Losing
+        // this claim means a concurrent writer created the table — the
+        // next attempt takes the APPEND path against it (delegating to
+        // commit here would retry with overwrite semantics and erase the
+        // winner's rows)
+        Right(Snapshot(0L, -1L, entityCol, timeCol, buckets, batchId, deltaCols,
+          stageOnce(0L), false, ddl))
+      case Some(p) if batchId >= 0 && p.batchId == batchId => Left(p.id)
+      case Some(p) =>
+        require(p.nbuckets < 0 || p.nbuckets == buckets,
+          s"bucket count $buckets != table's ${p.nbuckets} at $root")
+        require(p.entityCol == entityCol && p.timeCol == timeCol,
+          s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol})")
+        if (evolveSchema)
+          require(p.columns.forall(deltaCols.contains),
+            s"schema evolution on append is ADDITIVE only: delta $deltaCols " +
+              s"is missing recorded columns ${p.columns.filterNot(deltaCols.contains)}")
+        else
+          require(p.columns.isEmpty || p.columns == deltaCols,
+            s"delta schema $deltaCols != table's ${p.columns} " +
+              "(pass evolveSchema = true to add columns)")
+        requireTypesMatch(p, delta, "delta")
+        val slices = stageOnce(p.id + 1)
+        if (slices.isEmpty) Left(p.id) // empty delta: nothing to commit
+        else if (p.columns.isEmpty)
+          Right(Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets, batchId,
+            p.columns, p.buckets ++ slices, p.mixedSchema, p.schemaDdl))
+        else
+          Right(Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets, batchId,
+            deltaCols, p.buckets ++ slices,
+            p.mixedSchema || p.columns != deltaCols, ddl))
     }
-    throw new IllegalStateException(
-      s"commitDelta lost the optimistic claim $MaxCommitAttempts times at " +
-        s"$root — a writer is committing faster than this one can retry")
   }
 
   /** UPSERT `updates` by the table's (entity, time) key — Iceberg's MERGE
@@ -561,85 +549,56 @@ object SnapshotTable {
   def commitUpsert(updates: DataFrame, root: String, entityCol: String,
       timeCol: String, buckets: Int = 16, batchId: Long = -1L): Long = {
     val spark = updates.sparkSession
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      currentSnapshot(root) match {
-        case None =>
-          // empty table: an upsert is just a first commit of the updates
-          return commitDelta(updates, root, entityCol, timeCol, buckets, batchId)
-        case Some(p) =>
-          if (batchId >= 0 && p.batchId == batchId) return p.id
-          // a MERGE is only correct against the table's own bucketing: a
-          // legacy manifest without a recorded count cannot be upserted
-          // (an append records the count, after which upserts work)
-          require(p.nbuckets > 0,
-            s"bucket count unrecorded at $root (pre-slice-format manifest): " +
-              "one append records it, then upsert")
-          require(p.nbuckets == buckets,
-            s"bucket count $buckets != table's ${p.nbuckets} at $root")
-          require(p.entityCol == entityCol && p.timeCol == timeCol,
-            s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol})")
-          require(p.columns.isEmpty || p.columns == updates.columns.sorted.toSeq,
-            s"updates schema ${updates.columns.sorted.toSeq} != table's ${p.columns}")
-          requireTypesMatch(p, updates, "updates")
+    commitLoop(root, "commitUpsert") {
+      case None =>
+        // empty table: an upsert is just a first commit of the updates
+        Left(commitDelta(updates, root, entityCol, timeCol, buckets, batchId))
+      case Some(p) if batchId >= 0 && p.batchId == batchId => Left(p.id)
+      case Some(p) =>
+        // a MERGE is only correct against the table's own bucketing: a
+        // legacy manifest without a recorded count cannot be upserted
+        // (an append records the count, after which upserts work)
+        require(p.nbuckets > 0,
+          s"bucket count unrecorded at $root (pre-slice-format manifest): " +
+            "one append records it, then upsert")
+        require(p.nbuckets == buckets,
+          s"bucket count $buckets != table's ${p.nbuckets} at $root")
+        require(p.entityCol == entityCol && p.timeCol == timeCol,
+          s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol})")
+        require(p.columns.isEmpty || p.columns == updates.columns.sorted.toSeq,
+          s"updates schema ${updates.columns.sorted.toSeq} != table's ${p.columns}")
+        requireTypesMatch(p, updates, "updates")
 
-          val df = updates.withColumn(BucketCol, bucketExpr(entityCol, buckets))
-          // only the bucket IDS are needed up front (stats of what is
-          // actually written come from the staged merge) — a distinct over
-          // the bucket expression, not a full hash-digest aggregation
-          val touched = df.select(col(BucketCol).as("b")).distinct()
-            .collect().map { r =>
-              if (r.isNullAt(0)) throw new IllegalArgumentException(
-                "SnapshotTable: the entity column contains nulls — filter " +
-                  "or recode null entities before upsert")
-              r.getInt(0)
-            }.toSet
-          if (touched.isEmpty) return p.id
-          val bySlices = p.buckets.groupBy(_.bucket)
-          val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
-
+        val df = updates.withColumn(BucketCol, bucketExpr(entityCol, buckets))
+        // only the bucket IDS are needed up front (stats of what is
+        // actually written come from the staged merge) — a distinct over
+        // the bucket expression, not a full hash-digest aggregation
+        val touched = df.select(col(BucketCol).as("b")).distinct()
+          .collect().map { r =>
+            if (r.isNullAt(0)) throw new IllegalArgumentException(
+              "SnapshotTable: the entity column contains nulls — filter " +
+                "or recode null entities before upsert")
+            r.getInt(0)
+          }.toSet
+        if (touched.isEmpty) Left(p.id)
+        else {
           // merged content of the touched buckets: surviving old rows + all
           // updates (old side conformed so a pre-evolution slice can't drop
           // the union schema)
+          val oldSlices = p.buckets.filter(b => touched(b.bucket)).sortBy(_.bucket)
           val old = readSlices(spark, oldSlices, p.mixedSchema)
             .map(conform(_, p)).getOrElse(df.limit(0))
           val merged = old
             .join(df.select(col(entityCol), col(timeCol)).distinct(),
               Seq(entityCol, timeCol), "left_anti")
             .unionByName(df, allowMissingColumns = true)
-
-          val stage = newStage(root, p.id + 1)
-          merged.repartition(math.max(1, touched.size), col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col(entityCol), col(timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-          // stats of what was actually written (post-merge), one scan of the
-          // already-staged parquet — never the untouched buckets
-          val mergedStats = bucketStats(
-            spark.read.parquet(stage.toString), updates.columns.toSeq, timeCol)
-
-          val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
-            if (touched.contains(k))
-              mergedStats.get(k).map { case (rows, wm, dg, tmn) =>
-                BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn)
-              }.toSeq
-            else bySlices(k)
-          }
-          // touched buckets were rewritten on the full recorded schema
-          // (conform) — only untouched ones can still hold old-schema slices
-          val mixed = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_))
           // a maintenance upsert (no batchId) must CARRY the parent's
           // streaming replay marker, like compact does — overwriting it
           // with -1 would let a crash-replayed micro-batch re-append
-          val bid = if (batchId >= 0) batchId else p.batchId
-          publish(root, Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets,
-            bid, p.columns, newBuckets, mixed, p.schemaDdl)) match {
-            case Some(id) => return id
-            case None     => attempt += 1 // merged vs a stale parent: redo
-          }
-      }
+          Right(rewriteBuckets(spark, root, p, touched, merged, updates.columns.toSeq)
+            .copy(batchId = if (batchId >= 0) batchId else p.batchId))
+        }
     }
-    throw new IllegalStateException(
-      s"commitUpsert lost the optimistic claim $MaxCommitAttempts times at $root")
   }
 
   /** DELETE every row of the given entities (the right-to-be-forgotten
@@ -656,10 +615,8 @@ object SnapshotTable {
       implicit enc: org.apache.spark.sql.Encoder[T]): Long = {
     require(keys.nonEmpty && !keys.contains(null.asInstanceOf[T]),
       "commitDelete: keys must be a non-empty, null-free list")
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val p = currentSnapshot(root)
-        .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    commitLoop(root, "commitDelete") { head =>
+      val p = head.getOrElse(throw noSnapshot(root))
       require(p.nbuckets > 0,
         s"bucket count unrecorded at $root (pre-slice-format manifest): " +
           "one commit records it")
@@ -670,48 +627,18 @@ object SnapshotTable {
       val touched = keyDf
         .select(bucketExpr(p.entityCol, p.nbuckets).as("b"))
         .distinct().collect().map(_.getInt(0)).toSet
-      val bySlices = p.buckets.groupBy(_.bucket)
-      val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
-      if (oldSlices.isEmpty) return p.id // keys hash only into empty buckets
-
-      val kept = readSlices(spark, oldSlices, p.mixedSchema)
-        .map(conform(_, p)).get
-        .filter(!col(p.entityCol).isInCollection(keys))
-      val stage = newStage(root, p.id + 1)
-      kept.repartition(math.max(1, touched.size), col(BucketCol))
-        .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-      val dataCols =
-        if (p.columns.nonEmpty) p.columns
-        else kept.columns.filterNot(_ == BucketCol).toSeq
-      val hasData = {
-        // an all-rows-deleted stage has no bucket dirs to scan
-        val st = Files.list(stage)
-        try st.anyMatch(q => q.getFileName.toString.startsWith(s"$BucketCol="))
-        finally st.close()
-      }
-      val keptStats =
-        if (hasData)
-          bucketStats(spark.read.parquet(stage.toString), dataCols, p.timeCol)
-        else Map.empty[Int, (Long, Long, Long, Long)]
-
-      val newBuckets = bySlices.keySet.toSeq.sorted.flatMap { k =>
-        if (touched.contains(k))
-          keptStats.get(k).map { case (rows, wm, dg, tmn) =>
-            BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn)
-          }.toSeq // empty bucket: gone from the manifest
-        else bySlices(k)
-      }
-      val mixed = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_))
-      publish(root, Snapshot(p.id + 1, p.id, p.entityCol, p.timeCol,
-        p.nbuckets, p.batchId, p.columns, newBuckets, mixed,
-        p.schemaDdl)) match {
-        case Some(id) => return id
-        case None     => attempt += 1
+      val oldSlices = p.buckets.filter(b => touched(b.bucket)).sortBy(_.bucket)
+      if (oldSlices.isEmpty) Left(p.id) // keys hash only into empty buckets
+      else {
+        val kept = readSlices(spark, oldSlices, p.mixedSchema)
+          .map(conform(_, p)).get
+          .filter(!col(p.entityCol).isInCollection(keys))
+        val dataCols =
+          if (p.columns.nonEmpty) p.columns
+          else kept.columns.filterNot(_ == BucketCol).toSeq
+        Right(rewriteBuckets(spark, root, p, touched, kept, dataCols))
       }
     }
-    throw new IllegalStateException(
-      s"commitDelete lost the optimistic claim $MaxCommitAttempts times at $root")
   }
 
   /** Compact buckets that have accumulated more than `maxSlices` slices
@@ -721,56 +648,41 @@ object SnapshotTable {
     * whose stats are the FOLD of the replaced ones (no re-hash — same rows,
     * same digest by xor-associativity). Buckets at or under the threshold
     * are untouched. Returns the new snapshot id, or the current one if
-    * nothing needed compaction.
+    * nothing needed compaction. A concurrent append that wins the claim
+    * changes the slice set, so the next attempt plans the compaction anew.
     */
-  def compact(spark: SparkSession, root: String, maxSlices: Int = 8): Long = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val p = currentSnapshot(root)
-        .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+  def compact(spark: SparkSession, root: String, maxSlices: Int = 8): Long =
+    commitLoop(root, "compact") { head =>
+      val p = head.getOrElse(throw noSnapshot(root))
       val bySlices = p.buckets.groupBy(_.bucket)
       val toCompact = bySlices.filter(_._2.size > maxSlices).keys.toSeq.sorted
-      if (toCompact.isEmpty) return p.id
-
-      val stage = newStage(root, p.id + 1)
-      val folded = p.folded
-      // ONE job for all compacted buckets (not a driver loop of per-bucket
-      // jobs): one scan per stage dir the slices live in, one shuffle
-      // hash-partitioned by bucket, one sorted file per bucket out of
-      // partitionBy
-      readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.mixedSchema)
-        .foreach { df =>
-          df.repartition(toCompact.size, col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+      if (toCompact.isEmpty) Left(p.id)
+      else {
+        val stage = newStage(root, p.id + 1)
+        val folded = p.folded
+        // ONE job for all compacted buckets (not one job per bucket): one
+        // scan per stage dir the slices live in, one shuffle
+        // hash-partitioned by bucket, one sorted file per bucket out of
+        // partitionBy
+        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.mixedSchema)
+          .foreach(df => writeStage(df.repartition(toCompact.size, col(BucketCol)),
+            stage, BucketCol, p.entityCol, p.timeCol))
+        val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
+          if (toCompact.contains(k)) {
+            val (rows, wm, dg) = folded(k)
+            // tmin folds by min — a slice without a claim (MinValue) keeps
+            // the compacted slice claim-free, same conservative semantics
+            Seq(slice(k, stage, (rows, wm, dg, ss.map(_.tmin).min)))
+          } else ss
         }
-      val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
-        if (toCompact.contains(k)) {
-          val (rows, wm, dg) = folded(k)
-          // tmin folds by min — a slice without a claim (MinValue) keeps
-          // the compacted slice claim-free, same conservative semantics
-          Seq(BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm,
-            dg, ss.map(_.tmin).min))
-        } else ss
-      }
-      // batchId carries over: compaction must not defeat the replay-skip of
-      // the delta commit it follows (a crash between them would otherwise
-      // re-append the batch on restart). mixedSchema carries too —
-      // UNCOMPACTED buckets may still hold pre-evolution slices (compacted
-      // ones are rewritten under the merged schema)
-      publish(root, Snapshot(p.id + 1, p.id, p.entityCol, p.timeCol,
-        p.nbuckets, p.batchId, p.columns, newBuckets, p.mixedSchema,
-        p.schemaDdl)) match {
-        case Some(id) => return id
-        case None     =>
-          // a concurrent append landed between our read and claim: the
-          // slice set changed, so the compaction plan is recomputed whole
-          attempt += 1
+        // batchId carries over: compaction must not defeat the replay-skip
+        // of the delta commit it follows (a crash between them would
+        // otherwise re-append the batch on restart). mixedSchema carries too
+        // — UNCOMPACTED buckets may still hold pre-evolution slices
+        // (compacted ones are rewritten under the merged schema)
+        Right(p.copy(id = p.id + 1, parent = p.id, buckets = newBuckets))
       }
     }
-    throw new IllegalStateException(
-      s"compact lost the optimistic claim $MaxCommitAttempts times at $root")
-  }
 
   /** The one scan every read and rewrite path opens data through. The
     * schema is inferred ONCE per call — one footer-reading job — and every
@@ -826,8 +738,7 @@ object SnapshotTable {
     * the committed content, including the bucket column.
     */
   def read(spark: SparkSession, root: String, id: Option[Long] = None): DataFrame = {
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val snap = resolve(root, id)
     readSlices(spark, snap.buckets, snap.mixedSchema)
       .map(conform(_, snap))
       .getOrElse(spark.emptyDataFrame)
@@ -855,8 +766,7 @@ object SnapshotTable {
     require(keys.nonEmpty && !keys.contains(null.asInstanceOf[T]),
       "readEntities: keys must be a non-empty, null-free list")
     requireWindow("readEntities", from, until)
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val snap = resolve(root, id)
     require(snap.nbuckets > 0,
       s"bucket count unrecorded at $root (pre-slice-format manifest): " +
         "one commit records it, or use read() with a filter")
@@ -939,8 +849,7 @@ object SnapshotTable {
       "readRange: at least one bound (from/until) is required — use read() " +
         "for a full scan")
     requireWindow("readRange", from, until)
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val snap = resolve(root, id)
     val keep = snap.buckets.filter(sliceInWindow(_, from, until))
     val pred = windowPredicates(snap.timeCol, from, until).reduce(_ && _)
     readSlices(spark, keep, snap.mixedSchema)
@@ -960,8 +869,7 @@ object SnapshotTable {
   def readIncremental(spark: SparkSession, root: String, fromId: Long,
       toId: Option[Long] = None): DataFrame = {
     val from = snapshot(root, fromId)
-    val to = toId.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val to = resolve(root, toId)
     val fromDirs = from.buckets.map(_.dir).toSet
     require(fromDirs.subsetOf(to.buckets.map(_.dir).toSet),
       s"snapshot $fromId's slices were compacted away after id ${from.id}; " +
@@ -979,15 +887,7 @@ object SnapshotTable {
     * kept. Returns (manifests deleted, data dirs deleted).
     */
   def expireSnapshots(root: String, keepFrom: Long): (Int, Int) = {
-    val snapsDir = Paths.get(root, "snapshots")
-    if (!Files.exists(snapsDir)) return (0, 0)
-    val all = {
-      val stream = Files.list(snapsDir)
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-        .map(p => fromJson(Files.readString(p))).toSeq
-      finally stream.close()
-    }
+    val all = allSnapshots(root)
     val cur = currentId(root).getOrElse(-1L)
     val bound = math.min(keepFrom, cur) // never expire CURRENT
     val (dead, alive) = all.partition(_.id < bound)
@@ -1001,17 +901,19 @@ object SnapshotTable {
     val deadStageDirs = dead.flatMap(_.buckets.map(b => Paths.get(b.dir).getParent))
       .distinct
       .filterNot(referencedStages.contains)
-    deadStageDirs.foreach { stage =>
-      if (Files.exists(stage)) {
-        val walk = Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-    dead.foreach(s => Files.deleteIfExists(snapsDir.resolve(s"v${s.id}.json")))
+    deadStageDirs.foreach(deleteTree)
+    dead.foreach(s => Files.deleteIfExists(Paths.get(root, "snapshots", s"v${s.id}.json")))
     (dead.size, deadStageDirs.size)
   }
+
+  /** Delete `dir` and everything under it (a no-op when it is gone). */
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p): Unit)
+      finally walk.close()
+    }
 
   /** Reclaim ORPHANS: stage directories no manifest references (a lost
     * optimistic retry or a killed writer stages data that never publishes)
@@ -1029,16 +931,7 @@ object SnapshotTable {
     val snapsDir = Paths.get(root, "snapshots")
     val dataDir = Paths.get(root, "data")
     val referenced: Set[Path] =
-      if (!Files.exists(snapsDir)) Set.empty
-      else {
-        val st = Files.list(snapsDir)
-        try st.iterator().asScala
-          .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-          .flatMap(p => fromJson(Files.readString(p)).buckets
-            .map(b => Paths.get(b.dir).getParent))
-          .toSet
-        finally st.close()
-      }
+      allSnapshots(root).flatMap(_.buckets.map(b => Paths.get(b.dir).getParent)).toSet
     var stages = 0
     if (Files.exists(dataDir)) {
       val st = Files.list(dataDir)
@@ -1048,13 +941,7 @@ object SnapshotTable {
       candidates
         .filterNot(referenced.contains)
         .filter(d => Files.getLastModifiedTime(d).toMillis < cutoff)
-        .foreach { d =>
-          val walk = Files.walk(d)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p): Unit)
-          finally walk.close()
-          stages += 1
-        }
+        .foreach { d => deleteTree(d); stages += 1 }
     }
     var tmps = 0
     if (Files.exists(snapsDir)) {
@@ -1078,17 +965,7 @@ object SnapshotTable {
   def lineage(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val cur = currentId(root)
-    val snapsDir = Paths.get(root, "snapshots")
-    val snaps =
-      if (!Files.exists(snapsDir)) Seq.empty[Snapshot]
-      else {
-        val stream = Files.list(snapsDir)
-        try stream.iterator().asScala
-          .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-          .map(p => fromJson(Files.readString(p))).toSeq
-        finally stream.close()
-      }
-    snaps.sortBy(_.id)
+    allSnapshots(root)
       .flatMap(s => s.buckets.map(b => (s.id, s.parent, b.bucket, b.dir,
         b.rows, b.watermark, b.digest, b.tmin, cur.contains(s.id))))
       .toDF("snapshot_id", "parent_id", "bucket", "dir", "rows", "watermark",

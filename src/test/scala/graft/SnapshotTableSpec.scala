@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
@@ -340,9 +341,9 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("manifest strings with quotes/braces round-trip; special-char roots work") {
     import spark.implicits._
-    // a quote in the root exercises esc() on write and unesc() on read for
-    // every dir field; the unmatched braces/brackets exercise the
-    // string-aware array scanner in fromJson
+    // a quote in the root is escaped on write and unescaped on read for
+    // every dir field; the unmatched braces/brackets must not confuse the
+    // manifest parser
     val root = tmpRoot("esc") + "/we\"ird pa}t]h"
     val df = Seq((1L, 100L, "a"), (2L, 200L, "b")).toDF("entity_id", "event_ms", "v")
     SnapshotTable.commit(df, root, "entity_id", "event_ms", buckets = 4)
@@ -685,6 +686,106 @@ class SnapshotTableSpec extends AnyFunSuite {
         "an entire writer's delta went missing")
       assert(SnapshotTable.currentId(root).contains(ids.max))
     } finally pool.shutdown()
+  }
+
+  test("racing compact and upsert against appends: every row lands, one claim per id") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val root = tmpRoot("race")
+    def rows(es: Seq[Long], n: Int, src: String, v: Int) =
+      es.flatMap(e => (0 until n).map(j => (e, e * 1000L + j, src, v)))
+        .toDF("entity_id", "event_ms", "src", "v")
+    // three slices per bucket before the race, so every compact has work
+    val base = rows(0L until 8L, 12, "base", 0)
+    SnapshotTable.commit(base.filter(col("event_ms") % 3 === 0), root,
+      "entity_id", "event_ms", buckets = 4)
+    Seq(1, 2).foreach(r => SnapshotTable.commitDelta(
+      base.filter(col("event_ms") % 3 === r), root, "entity_id", "event_ms", buckets = 4))
+    // upsert i rewrites entity i's rows and inserts one row of entity 50+i
+    val upserts = (0 until 2).map(i =>
+      rows(Seq(i.toLong), 12, s"up$i", 100 + i).unionByName(rows(Seq(50L + i), 1, s"up$i", 100 + i)))
+    val appends = (0 until 4).map(a => rows(Seq(20L + a), 10, s"app$a", a))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val (deltaIds, upsertIds, compactIds) = try {
+      val d = appends.map(df => Future(
+        SnapshotTable.commitDelta(df, root, "entity_id", "event_ms", buckets = 4)))
+      val u = upserts.map(df => Future(
+        SnapshotTable.commitUpsert(df, root, "entity_id", "event_ms", buckets = 4)))
+      val c = (0 until 2).map(_ => Future(SnapshotTable.compact(spark, root, maxSlices = 1)))
+      def all(fs: Seq[Future[Long]]) = Await.result(Future.sequence(fs), 5.minutes)
+      (all(d), all(u), all(c))
+    } finally pool.shutdown()
+
+    // content: the head is exactly base with the upserted entities
+    // replaced, plus every upsert insert and every appended row
+    val expected = base.filter(!col("entity_id").isin(0L, 1L))
+      .unionByName(upserts.reduce(_ unionByName _))
+      .unionByName(appends.reduce(_ unionByName _))
+    val head = SnapshotTable.read(spark, root).drop(SnapshotTable.BucketCol)
+    assert(head.count() == expected.count())
+    assert(digestOf(head) == digestOf(expected), "a racing writer's rows were lost")
+
+    // ids are contiguous: one manifest per id, each built on the previous
+    val headId = SnapshotTable.currentId(root).get
+    val snaps = (0L to headId).map(SnapshotTable.snapshot(root, _))
+    assert(snaps.map(_.parent) == (-1L until headId), "snapshot chain has a gap")
+    val manifests = Files.list(Paths.get(root, "snapshots"))
+    try assert(manifests.iterator().asScala.map(_.getFileName.toString).toSeq.sorted ==
+      (0L to headId).map(id => s"v$id.json").sorted, "stray manifest or leftover tmp claim")
+    finally manifests.close()
+    // one claim per id: a compaction commit keeps its parent's folded stats
+    // (appends add rows, upserts change digests); a compact with nothing
+    // left to do returns the head it saw, so only its commits count
+    val compactCommits = compactIds.distinct
+      .filter(id => id > 0 && snaps(id.toInt).folded == snaps(id.toInt - 1).folded)
+    assert(compactCommits.nonEmpty, s"no compaction committed: $compactIds")
+    val claimed = deltaIds ++ upsertIds ++ compactCommits
+    assert(claimed.distinct.size == claimed.size, s"an id was claimed twice: $claimed")
+    assert(headId + 1 == 3 + claimed.size, s"ids $claimed do not account for head $headId")
+  }
+
+  test("manifest codec golden: reads the parent writer's exact bytes and writes them back") {
+    // a literal manifest as the hand-rolled writer emitted it: a \u0001
+    // escape, quotes and braces in a dir and a column name, a negative
+    // digest and a tmin of Long.MinValue ("no lower-bound claim")
+    val golden =
+      "{\"id\":7,\"parent\":6,\"entity_col\":\"entity_id\"," +
+      "\"time_col\":\"event_ms\",\"nbuckets\":4,\"batch_id\":12," +
+      "\"mixed_schema\":true,\"schema_ddl\":\"entity_id BIGINT," +
+      "event_ms BIGINT,`we\\\"ird} {\\u0001col` STRING\"," +
+      "\"columns\":[\"entity_id\",\"event_ms\"," +
+      "\"we\\\"ird} {\\u0001col\"],\"buckets\":[{\"bucket\":0," +
+      "\"dir\":\"/t/data/s7_1c0/pbucket=0\",\"rows\":3,\"watermark\":30," +
+      "\"digest\":-1234567890123,\"tmin\":-9223372036854775808}," +
+      "{\"bucket\":2," +
+      "\"dir\":\"/t/we\\\"ird}{]\\\\\\u0001/data/s5_1c2/pbucket=2\"," +
+      "\"rows\":5,\"watermark\":50,\"digest\":42,\"tmin\":10}]}"
+    val odd = "we\"ird} {\u0001col"
+    val expected = SnapshotTable.Snapshot(7L, 6L, "entity_id", "event_ms", 4, 12L,
+      Seq("entity_id", "event_ms", odd),
+      Seq(SnapshotTable.BucketManifest(0, "/t/data/s7_1c0/pbucket=0", 3L, 30L,
+          -1234567890123L, Long.MinValue),
+        SnapshotTable.BucketManifest(2, "/t/we\"ird}{]\\\u0001/data/s5_1c2/pbucket=2",
+          5L, 50L, 42L, 10L)),
+      mixedSchema = true, schemaDdl = s"entity_id BIGINT,event_ms BIGINT,`$odd` STRING")
+    val parsed = SnapshotTable.fromJson(golden)
+    assert(parsed == expected)
+    assert(SnapshotTable.toJson(parsed) == golden)
+    assert(SnapshotTable.fromJson(SnapshotTable.toJson(parsed)) == parsed)
+    // every optional field absent (the oldest format): the legacy defaults
+    val bare = "{\"id\":0,\"parent\":-1,\"entity_col\":\"e\",\"time_col\":\"t\"," +
+      "\"buckets\":[{\"bucket\":1,\"dir\":\"/d\",\"rows\":2,\"watermark\":3,\"digest\":4}]}"
+    assert(SnapshotTable.fromJson(bare) == SnapshotTable.Snapshot(0L, -1L, "e", "t",
+      nbuckets = -1, batchId = -1L, columns = Seq.empty,
+      buckets = Seq(SnapshotTable.BucketManifest(1, "/d", 2L, 3L, 4L, Long.MinValue)),
+      mixedSchema = false, schemaDdl = ""))
+    // a crash mid-write leaves a truncated claim: every strict prefix must
+    // fail to parse rather than yield a partial snapshot
+    (0 until golden.length).foreach { n =>
+      intercept[Exception](SnapshotTable.fromJson(golden.take(n)))
+    }
   }
 
   test("a lagging CURRENT pointer heals: the claimed head stays visible") {
